@@ -13,9 +13,13 @@ Route parity (reference -> method):
 - tier-1 ranked list           -> tier1_list            (R8)
 - schema discovery             -> schema                (G7)
 
-State lives in plain DataFrames (parquet-persistable); every mutation is an
-anti-join + union — the MERGE shape that maps 1:1 onto Delta MERGE INTO on a
-real deployment.  All writes are idempotent on ids (replay-safe, SURVEY §7.3).
+State lives in plain DataFrames (parquet-persistable).  Every write builds
+the table's next state — a MERGE (anti-join + union, the shape that maps 1:1
+onto Delta MERGE INTO on a real deployment), a filter or a column rewrite —
+and assigns it only through ``MemoryEngine._commit``, which materializes it:
+each read sees a settled copy with pinned timestamps and an O(1)-deep plan,
+like a store of record.  All writes are idempotent on ids (replay-safe,
+SURVEY §7.3).
 """
 
 from __future__ import annotations
@@ -102,6 +106,13 @@ CHUNK_SCHEMA = StructType([
     StructField("consent", StringType()),
     StructField("risk", StringType()),
 ])
+
+#: the feedback counters every new memory starts at zero
+COUNTER_COLS = [c for c in MEMORY_SCHEMA.names if c.startswith(("cache_", "citation_"))]
+
+#: memory columns every chunk carries as its searchable point payload
+CHUNK_PAYLOAD_COLS = [c for c in CHUNK_SCHEMA.names
+                      if c != "memory_id" and c in MEMORY_SCHEMA.names]
 
 NODE_SCHEMA = StructType([
     StructField("node_id", StringType()),
@@ -225,6 +236,18 @@ class MemoryEngine:
         #: running over-estimate of chunk rows, so ingest dedup routing never
         #: needs a count() scan; None = unknown (externally loaded tables)
         self._chunk_rows_est: int | None = 0
+        # attached search index (build_search_index): its path and method,
+        # the memory_ids whose index rows went stale since it was built, and
+        # the PQ serving state (codebooks, coarse centroids, re-rank floor,
+        # indexed row count, cached codes/rows relations)
+        self._ann_index_path: str | None = None
+        self._ann_method = "ivf"
+        self._ann_tombstones: DataFrame | None = None
+        self._pq_books = None
+        self._pq_cents = None
+        self._pq_rerank = 128
+        self._pq_n = 0
+        self._pq_frames: tuple[DataFrame, DataFrame] | None = None
         from .operators.schema_registry import SchemaRegistry
 
         self.schemas = SchemaRegistry(spark)
@@ -317,55 +340,18 @@ class MemoryEngine:
         # ~31 rows each) — task-launch + Arrow overhead dominated the write
         # path (~3 s per materialization in the ingest probe)
         new = new.coalesce(max(1, min(8, len(items) // 128 + 1)))
-        for c in ["cache_hit_total", "cache_hit_ema_30d", "cache_confidence_weighted_30d",
-                  "citation_hit_total", "citation_hit_ema_30d",
-                  "citation_confidence_weighted_30d"]:
-            new = new.withColumn(c, F.lit(0.0))
 
-        chunked = ingest_plan.chunk_text(new, content_col="content")
-        # materialize the batch's embeddings ONCE (batch-sized, <=1000
-        # memories): left lazy, every later action — this batch's reuse
-        # collect, the NEXT batch's dedup against self.chunks, merges,
-        # searches — re-executes the chunk+embed UDF stages of EVERY prior
-        # batch, so per-batch cost grows with session length (ingest probe:
-        # 5 s -> 24 s -> 57 s over three 1000-item batches)
-        embedded = self._embed_df(chunked).localCheckpoint(eager=True)
-        # the engine tracks its own chunk-count estimate so dedup routing
-        # never needs a count() scan (checkpointed plans carry no stats);
-        # load() resets it to None -> routing falls back to plan statistics
-        est = getattr(self, "_chunk_rows_est", None)
-        reused = ingest_dedup_reuse(embedded, self.chunks, INGEST_DEDUP_THRESHOLD,
-                                    approx_existing_rows=est)
-        reuse_map = {r.new_id: r.reuse_id for r in reused.collect()}
-        reused_mem_ids = {nid.rsplit("_", 1)[0] for nid in reuse_map}
-
-        fresh = new.filter(~F.col("memory_id").isin(*reused_mem_ids)) if reused_mem_ids else new
-        # materializing here also pins created_at/updated_at: a lazy
-        # current_timestamp() re-stamps on EVERY downstream action, so the
-        # same row could show different timestamps to different queries
-        fresh = fresh.localCheckpoint(eager=True)
-        fresh_chunks = (
-            embedded.join(
-                fresh.select("memory_id", "user_id", "user_read_access",
-                             "workspace_read_access", "role_read_access",
-                             "organization_read_access", "namespace_read_access",
-                             "namespace_id", "organization_id",
-                             # denormalized point payload (F2/F7 at chunk scan)
-                             "topics", "consent", "risk"),
-                "memory_id",
-            )
-        )
         # $previous resolution for manual-mode relationships must see the store
-        # as it was BEFORE this batch (shared_types.py:2152-2155).  Items whose
-        # memory was dropped as a near-dup reuse are SKIPPED entirely: the
-        # memory row never exists, so applying their policy would merge orphan
-        # nodes while the $this edges silently fail endpoint resolution
-        # (round-5 review finding) — the reference returns the existing memory
-        # and performs no graph work for the duplicate.
+        # as it was BEFORE this batch (shared_types.py:2152-2155), so it runs
+        # before the ingest commits.  Items whose memory is dropped as a
+        # near-dup reuse are SKIPPED entirely: the memory row never exists, so
+        # applying their policy would merge orphan nodes while the $this edges
+        # silently fail endpoint resolution (round-5 review finding) — the
+        # reference returns the existing memory and performs no graph work for
+        # the duplicate.
         manual_items = [
             it for it in items
-            if it["memory_id"] not in reused_mem_ids
-            and policies[it["memory_id"]]["mode"] == "manual"
+            if policies[it["memory_id"]]["mode"] == "manual"
             and (policies[it["memory_id"]]["nodes"] or policies[it["memory_id"]]["relationships"])
         ]
         prev_by_user: dict[str, str] = {}
@@ -384,30 +370,19 @@ class MemoryEngine:
                     .select("user_id", "memory_id").collect()
                 }
 
-        self.memories = self._merge(self.memories, fresh.select(*MEMORY_SCHEMA.names), ["memory_id"])
-        self.chunks = self._merge(self.chunks, fresh_chunks.select(*CHUNK_SCHEMA.names), ["chunk_id"])
-        if self._chunk_rows_est is not None:
-            # over-estimate (counts reused chunks too; deletes never subtract)
-            # — errs toward the scalable grid route, never toward a too-big
-            # driver broadcast
-            self._chunk_rows_est += embedded.count()
-        mem_nodes = fresh.select(
-            F.col("memory_id").alias("node_id"), F.lit("Memory").alias("label"),
-            F.substring("content", 1, 60).alias("prop_name"), F.lit("active").alias("prop_status"),
-        )
-        self.nodes = self._merge(self.nodes, mem_nodes, ["node_id"])
+        reused, _ = self._ingest(new)
+        # memory_id -> the memory its first reused chunk points at
+        reused_from: dict[str, str] = {}
+        for r in reused.collect():
+            reused_from.setdefault(r.new_id.rsplit("_", 1)[0],
+                                   r.reuse_id.rsplit("_", 1)[0])
 
         for it in manual_items:
-            self._apply_manual_graph(it["memory_id"], it.get("user_id"),
-                                     policies[it["memory_id"]], prev_by_user)
-
-        out = []
-        for it in items:
-            mid = it["memory_id"]
-            hit = next((v for k, v in reuse_map.items() if k.rsplit("_", 1)[0] == mid), None)
-            out.append(AddResult(memory_id=mid, reused=hit is not None,
-                                 reused_from=hit.rsplit("_", 1)[0] if hit else None))
-        return out
+            if it["memory_id"] not in reused_from:
+                self._apply_manual_graph(it["memory_id"], it.get("user_id"),
+                                         policies[it["memory_id"]], prev_by_user)
+        return [AddResult(memory_id=mid, reused=mid in reused_from,
+                          reused_from=reused_from.get(mid)) for mid in ids]
 
     def add_memory(self, **item) -> AddResult:
         return self.add_memory_batch([item])[0]
@@ -446,10 +421,10 @@ class MemoryEngine:
         near-dup reuse -> MERGE memories/chunks/nodes.
 
         Everything stays distributed: validation errors surface via bounded
-        ``take(1)``, the reuse set is applied with an anti-join (never an
-        isin of collected ids), and the only whole-archive materializations
-        are executor-side localCheckpoints — the same cadence the batch
-        path uses.  Returns {"imported": n, "reused": n}."""
+        ``take(1)``, and the batch path's own ``_ingest`` applies the reuse
+        set with an anti-join (never an isin of collected ids) — the only
+        whole-archive materializations are executor-side localCheckpoints.
+        Returns {"imported": n, "reused": n}."""
         from .functions.validation import looks_like_external_id
         from .operators import memory_policy as mp
         from .sources.omo import parse_omo, read_omo
@@ -500,48 +475,54 @@ class MemoryEngine:
             F.lit(policy["risk"]).alias("risk"),
         ).withColumn("created_at", F.current_timestamp()) \
          .withColumn("updated_at", F.current_timestamp())
-        for c in ["cache_hit_total", "cache_hit_ema_30d",
-                  "cache_confidence_weighted_30d", "citation_hit_total",
-                  "citation_hit_ema_30d", "citation_confidence_weighted_30d"]:
-            new = new.withColumn(c, F.lit(0.0))
+        reused, fresh = self._ingest(new)
+        n_reused = (reused.select(strip_chunk_suffix(F.col("new_id")))
+                    .distinct().count())
+        return {"imported": fresh.count(), "reused": n_reused}
 
-        chunked = ingest_plan.chunk_text(new, content_col="content")
-        embedded = self._embed_df(chunked).localCheckpoint(eager=True)
-        est = getattr(self, "_chunk_rows_est", None)
-        reused = ingest_dedup_reuse(embedded, self.chunks, INGEST_DEDUP_THRESHOLD,
-                                    approx_existing_rows=est)
-        # distributed reuse application: memory ids with ANY reused chunk drop
-        # out via anti-join (the batch path's collected reuse_map, reshaped)
-        reused_mems = (reused
-                       .select(strip_chunk_suffix(F.col("new_id")).alias("memory_id"))
-                       .distinct().localCheckpoint(eager=True))
-        n_reused = reused_mems.count()
-        fresh = new.join(reused_mems, "memory_id", "left_anti") \
-                   .localCheckpoint(eager=True)
-        n_fresh = fresh.count()
-        fresh_chunks = embedded.join(
-            fresh.select("memory_id", "user_id", "user_read_access",
-                         "workspace_read_access", "role_read_access",
-                         "organization_read_access", "namespace_read_access",
-                         "namespace_id", "organization_id",
-                         "topics", "consent", "risk"),
-            "memory_id",
-        )
-        self.memories = self._merge(self.memories,
-                                    fresh.select(*MEMORY_SCHEMA.names),
-                                    ["memory_id"])
-        self.chunks = self._merge(self.chunks,
-                                  fresh_chunks.select(*CHUNK_SCHEMA.names),
-                                  ["chunk_id"])
-        if self._chunk_rows_est is not None:
-            self._chunk_rows_est += embedded.count()
+    def _ingest(self, new: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """The write path behind add_memory_batch and import_omo_archive:
+        chunk -> embed -> V4 near-dup reuse -> MERGE memories/chunks/nodes.
+        ``new`` holds memory rows without the feedback counters, which start
+        at zero.  Returns the reuse pairs {new_id, reuse_id, score} and the
+        fresh (stored) memory rows, both materialized.  Nothing is collected
+        to the driver, so an archive-sized ``new`` stays distributed."""
+        new = new.select("*", *[F.lit(0.0).alias(c) for c in COUNTER_COLS])
+        # materialize the batch's embeddings ONCE: left lazy, the reuse check,
+        # the chunk merge and the row-count estimate would each re-run the
+        # chunk+embed UDF stages
+        embedded = self._embed_df(
+            ingest_plan.chunk_text(new, content_col="content")).localCheckpoint(eager=True)
+        # the engine tracks its own chunk-count estimate so dedup routing
+        # never needs a count() scan (checkpointed plans carry no stats);
+        # load() resets it to None -> routing falls back to plan statistics.
+        # The reuse pairs are materialized: they feed the anti-join below
+        # and the callers' reads
+        reused = ingest_dedup_reuse(
+            embedded, self.chunks, INGEST_DEDUP_THRESHOLD,
+            approx_existing_rows=self._chunk_rows_est).localCheckpoint(eager=True)
+        # memories with ANY reused chunk drop out via anti-join (never an isin
+        # of collected ids); the fresh rows feed three commits, so they are
+        # materialized once
+        fresh = new.join(
+            reused.select(strip_chunk_suffix(F.col("new_id")).alias("memory_id")).distinct(),
+            "memory_id", "left_anti").localCheckpoint(eager=True)
+        fresh_chunks = embedded.join(fresh.select("memory_id", *CHUNK_PAYLOAD_COLS), "memory_id")
+        self.memories = self._commit(self._merge(
+            self.memories, fresh.select(*MEMORY_SCHEMA.names), ["memory_id"]))
+        self.chunks = self._commit(self._merge(
+            self.chunks, fresh_chunks.select(*CHUNK_SCHEMA.names), ["chunk_id"]))
         mem_nodes = fresh.select(
             F.col("memory_id").alias("node_id"), F.lit("Memory").alias("label"),
-            F.substring("content", 1, 60).alias("prop_name"),
-            F.lit("active").alias("prop_status"),
+            F.substring("content", 1, 60).alias("prop_name"), F.lit("active").alias("prop_status"),
         )
-        self.nodes = self._merge(self.nodes, mem_nodes, ["node_id"])
-        return {"imported": n_fresh, "reused": n_reused}
+        self.nodes = self._commit(self._merge(self.nodes, mem_nodes, ["node_id"]))
+        if self._chunk_rows_est is not None:
+            # over-estimate (counts reused chunks too; deletes never subtract)
+            # — errs toward the scalable grid route, never toward a too-big
+            # driver broadcast
+            self._chunk_rows_est += embedded.count()
+        return reused, fresh
 
     # ---- embedding seam -------------------------------------------------------------
 
@@ -627,11 +608,11 @@ class MemoryEngine:
             F.col("entity_id").alias("node_id"), "label", "prop_name",
             F.lit("active").alias("prop_status"),
         ).dropDuplicates().localCheckpoint(eager=True)
-        self.nodes = self._merge(self.nodes, ent_nodes, ["node_id"])
+        self.nodes = self._commit(self._merge(self.nodes, ent_nodes, ["node_id"]))
         new_edges = related.unionByName(
             extracted.withColumn("similarity_score", F.lit(None).cast("double"))
         )
-        self.edges = self._merge(self.edges, new_edges, ["src", "dst", "rel_type"])
+        self.edges = self._commit(self._merge(self.edges, new_edges, ["src", "dst", "rel_type"]))
         return {
             "related_edges": related.count(),
             "entities": ent_nodes.count(),
@@ -734,19 +715,18 @@ class MemoryEngine:
         wrong scores."""
         from .sources import ann_index
 
-        if getattr(self, "_ann_index_path", None) is None:
+        if self._ann_index_path is None:
             raise ValueError("append_to_search_index requires build_search_index() first")
-        tomb = getattr(self, "_ann_tombstones", None)
-        if tomb is not None and memory_ids:
+        if self._ann_tombstones is not None and memory_ids:
             stale = [r.memory_id for r in
-                     tomb.filter(F.col("memory_id").isin(memory_ids)).collect()]
+                     self._ann_tombstones.filter(F.col("memory_id").isin(memory_ids)).collect()]
             if stale:
                 raise ValueError(
                     f"memories {sorted(set(stale))} have stale index rows "
                     "(deleted/updated since build): rebuild with "
                     "build_search_index instead of appending")
         new = self.chunks.filter(F.col("memory_id").isin(memory_ids))
-        if getattr(self, "_ann_method", "ivf") == "pq":
+        if self._ann_method == "pq":
             from .sources import pq_index
 
             n = new.count()
@@ -766,7 +746,7 @@ class MemoryEngine:
                  .sortWithinPartitions("chunk_id")
                  .write.mode("append").partitionBy(pq_index.BUCKET_COL)
                  .parquet(self._ann_index_path + ".rows"))
-                self._pq_n = getattr(self, "_pq_n", 0) + n
+                self._pq_n += n
                 # the cached relations snapshot the file listing — appends
                 # add files, so drop them to re-list on next serve
                 self._pq_frames = None
@@ -781,10 +761,10 @@ class MemoryEngine:
         live chunk table (round-6 probe finding: the previous liveness
         semi-join against self.chunks re-read the full corpus on every ANN
         query, costing more than the full scan the index exists to avoid)."""
-        if getattr(self, "_ann_index_path", None) is None:
+        if self._ann_index_path is None:
             return
-        t = getattr(self, "_ann_tombstones", None)
-        self._ann_tombstones = ids if t is None else self._bound(t.unionByName(ids))
+        t = self._ann_tombstones
+        self._ann_tombstones = self._commit(ids if t is None else t.unionByName(ids))
 
     def _ann_candidates(self, qvec: list[float], nprobe: int) -> DataFrame:
         """Chunk candidates from the attached IVF layout: bucket IN-filter
@@ -810,9 +790,8 @@ class MemoryEngine:
             # a pure-grouping HashAggregate (first(embedding)'s array buffer
             # forced SortAggregate); same rework as ann_index.ann_query
             cand = cand.drop(ann_index.BUCKET_COL).dropDuplicates()
-        tomb = getattr(self, "_ann_tombstones", None)
-        if tomb is not None:
-            cand = cand.join(F.broadcast(tomb), "memory_id", "left_anti")
+        if self._ann_tombstones is not None:
+            cand = cand.join(F.broadcast(self._ann_tombstones), "memory_id", "left_anti")
         return cand.drop(ann_index.BUCKET_COL)
 
     def _ann_candidates_pq(self, qvec: list[float], nprobe: int,
@@ -839,14 +818,13 @@ class MemoryEngine:
         # PLAN time — microseconds on local SSD, a listing round-trip per dir
         # on an object store (invalidated on append; tombstone deletes don't
         # change files)
-        if getattr(self, "_pq_frames", None) is None:
+        if self._pq_frames is None:
             self._pq_frames = (
                 self.spark.read.parquet(self._ann_index_path),
                 self.spark.read.parquet(self._ann_index_path + ".rows"))
         codes, rows_full = self._pq_frames
-        tomb = getattr(self, "_ann_tombstones", None)
-        if tomb is not None:
-            codes = codes.join(F.broadcast(tomb), "memory_id", "left_anti")
+        if self._ann_tombstones is not None:
+            codes = codes.join(F.broadcast(self._ann_tombstones), "memory_id", "left_anti")
         if ctx is not None:
             codes = codes.filter(compile_filter(ctx, None))
         if spec is not None and _spec_columns_on_chunks(codes, spec):
@@ -863,10 +841,8 @@ class MemoryEngine:
         # linearly with N, and an uncapped collect would be a driver OOM the
         # way an uncapped _collect_matrix is.  Past the cap, raise nprobe
         # granularity (C grows with N at build time) instead of re-rank.
-        rerank = pq_rerank_size(
-            getattr(self, "_pq_rerank", 128), top_k,
-            getattr(self, "_pq_n", 0),
-            len(getattr(self, "_pq_cents", []) or []), nprobe)
+        rerank = pq_rerank_size(self._pq_rerank, top_k, self._pq_n,
+                                len(self._pq_cents), nprobe)
         cand = pq_index.pq_candidates(
             self.spark, self._ann_index_path, qvec, rerank,
             codebooks=self._pq_books, id_col="chunk_id", nprobe=nprobe,
@@ -877,32 +853,16 @@ class MemoryEngine:
 
             probe = probe_buckets(qvec, self._pq_cents, nprobe)
             rows = rows.filter(F.col(pq_index.BUCKET_COL).isin(probe))
-        if getattr(self, "_pq_fused_fetch", True):
-            # fused serve (round-8): the ADC cut stays a DataFrame and the
-            # fetch semi-joins it as a broadcast — the candidate set is
-            # <= rerank rows BY CONSTRUCTION (TakeOrdered limit), so the
-            # broadcast is bounded like the old driver collect was, but the
-            # cut + fetch now run as ONE job with no py4j round trip and no
-            # per-query plan rebuild from thousands of IN-literals.  Bucket
-            # partition pruning (the coarse IO bound) still applies above;
-            # what's lost is row-group min/max pruning INSIDE the probed
-            # buckets — measured at the 600k probe, the job fusion wins
-            # (PERF.md round-8); flip _pq_fused_fetch for IO-bound deploys
-            # where footer pruning dominates scheduler latency.
-            rows = rows.join(F.broadcast(cand.select("chunk_id")),
-                             "chunk_id", "left_semi")
-            return rows.drop(pq_index.BUCKET_COL)
-        ids = [r.chunk_id for r in cand.select("chunk_id").collect()]
-        if len(ids) <= 1024:
-            # small candidate sets: a literal IN-filter reaches the parquet
-            # scan (footer min/max on the chunk-id-sorted rows table)
-            rows = rows.filter(F.col("chunk_id").isin(ids))
-        else:
-            # large sets: a 10k+-literal In() bloats the plan; a broadcast
-            # semi-join evaluates the same bounded set executor-side
-            ids_df = self.spark.createDataFrame(
-                [(i,) for i in ids], "chunk_id string")
-            rows = rows.join(F.broadcast(ids_df), "chunk_id", "left_semi")
+        # fused serve (round-8): the ADC cut stays a DataFrame and the fetch
+        # semi-joins it as a broadcast — the candidate set is <= rerank rows
+        # BY CONSTRUCTION (TakeOrdered limit), so the broadcast is bounded
+        # like a driver collect would be, but the cut + fetch run as ONE job
+        # with no py4j round trip and no per-query plan rebuild from
+        # thousands of IN-literals.  Bucket partition pruning (the coarse IO
+        # bound) still applies above; row-group min/max pruning INSIDE the
+        # probed buckets is traded for the job fusion (PERF.md round-8).
+        rows = rows.join(F.broadcast(cand.select("chunk_id")),
+                         "chunk_id", "left_semi")
         return rows.drop(pq_index.BUCKET_COL)
 
     def search(self, query_text: str, ctx: AclContext | None = None,
@@ -921,9 +881,9 @@ class MemoryEngine:
         qvec = self._embed_query(query_text)
         chunk_src = self.chunks
         if ann_nprobe is not None:
-            if getattr(self, "_ann_index_path", None) is None:
+            if self._ann_index_path is None:
                 raise ValueError("ann_nprobe requires build_search_index() first")
-            if getattr(self, "_ann_method", "ivf") == "pq":
+            if self._ann_method == "pq":
                 chunk_src = self._ann_candidates_pq(qvec, ann_nprobe, top_k,
                                                     ctx=ctx, spec=spec)
             else:
@@ -931,6 +891,10 @@ class MemoryEngine:
         out = search_plan(chunk_src, self.memories, qvec, ctx=ctx, spec=spec,
                           top_k=top_k, score_threshold=score_threshold)
         if log_query:
+            # run the plan once: the logged hit ids and the returned rows are
+            # the same materialized copy, so the caller's collect does not
+            # re-run the search
+            out = out.localCheckpoint(eager=True)
             hit_ids = [r.memory_id for r in out.select("memory_id").collect()]
             import hashlib
 
@@ -942,7 +906,7 @@ class MemoryEngine:
                 "query_log_id string, user_id string, query_text string, "
                 "retrieved_memory_ids array<string>",
             ).withColumn("created_at", F.current_timestamp())
-            self.query_logs = self._bound(self.query_logs.unionByName(log_row))
+            self.query_logs = self._commit(self.query_logs.unionByName(log_row))
             if hit_ids:
                 self.record_feedback(hit_ids, kind="cache")
         return out
@@ -1026,12 +990,9 @@ class MemoryEngine:
             rechunked = self._embed_df(
                 ingest_plan.chunk_text(changed, content_col="content")
             )
-            acl_cols = ["user_id", "user_read_access", "workspace_read_access",
-                        "role_read_access", "organization_read_access",
-                        "namespace_read_access", "namespace_id", "organization_id",
-                        "topics", "consent", "risk"]
-            new_chunks = rechunked.join(changed.select("memory_id", *acl_cols), "memory_id")
-            self.chunks = self._bound(
+            new_chunks = rechunked.join(
+                changed.select("memory_id", *CHUNK_PAYLOAD_COLS), "memory_id")
+            self.chunks = self._commit(
                 self.chunks.filter(F.col("memory_id") != memory_id).unionByName(
                     new_chunks.select(*CHUNK_SCHEMA.names)))
             # index rows for this memory now carry a stale embedding: exclude
@@ -1043,17 +1004,17 @@ class MemoryEngine:
             F.when(F.col("memory_id") == memory_id, F.current_timestamp())
             .otherwise(F.col("updated_at")),
         )
-        self.memories = self._bound(mem)
+        self.memories = self._commit(mem)
         return True
 
     def delete_memory(self, memory_id: str) -> None:
         """S12 cascade: memory row + its chunks + its node + touching edges
         (memory/memory_graph.py:9200-9459)."""
         self._tombstone(self.spark.createDataFrame([(memory_id,)], "memory_id string"))
-        self.memories = self._bound(self.memories.filter(F.col("memory_id") != memory_id))
-        self.chunks = self._bound(self.chunks.filter(F.col("memory_id") != memory_id))
-        self.nodes = self._bound(self.nodes.filter(F.col("node_id") != memory_id))
-        self.edges = self._bound(self.edges.filter(
+        self.memories = self._commit(self.memories.filter(F.col("memory_id") != memory_id))
+        self.chunks = self._commit(self.chunks.filter(F.col("memory_id") != memory_id))
+        self.nodes = self._commit(self.nodes.filter(F.col("node_id") != memory_id))
+        self.edges = self._commit(self.edges.filter(
             (F.col("src") != memory_id) & (F.col("dst") != memory_id)
         ))
 
@@ -1086,12 +1047,12 @@ class MemoryEngine:
         if n == 0:
             return 0
         self._tombstone(doomed)
-        self.memories = self._bound(self.memories.join(doomed, "memory_id", "left_anti"))
-        self.chunks = self._bound(self.chunks.join(doomed, "memory_id", "left_anti"))
-        self.nodes = self._bound(self.nodes.join(
+        self.memories = self._commit(self.memories.join(doomed, "memory_id", "left_anti"))
+        self.chunks = self._commit(self.chunks.join(doomed, "memory_id", "left_anti"))
+        self.nodes = self._commit(self.nodes.join(
             doomed.withColumnRenamed("memory_id", "node_id"), "node_id", "left_anti"
         ))
-        self.edges = self._bound(
+        self.edges = self._commit(
             self.edges
             .join(doomed.withColumnRenamed("memory_id", "src"), "src", "left_anti")
             .join(doomed.withColumnRenamed("memory_id", "dst"), "dst", "left_anti")
@@ -1113,6 +1074,9 @@ class MemoryEngine:
                  for n in nodes],
                 NODE_SCHEMA,
             )
+            # every label validates before anything is written; the call
+            # commits the node table once
+            merged = self.nodes
             for label in sorted({n["label"] for n in nodes}):
                 part = ndf.filter(F.col("label") == label)
                 keys = self.schemas.merge_keys(label)
@@ -1124,12 +1088,13 @@ class MemoryEngine:
                         props_from_columns(part, {
                             p: c for p, c in self._SCHEMA_PROP_COLS.items()
                         }), label)
-                    mine = self.nodes.filter(F.col("label") == label)
-                    others = self.nodes.filter(F.col("label") != label)
-                    merged = self._merge(mine, part, [colmap[k] for k in keys])
-                    self.nodes = others.unionByName(merged)
+                    mine = merged.filter(F.col("label") == label)
+                    others = merged.filter(F.col("label") != label)
+                    merged = others.unionByName(
+                        self._merge(mine, part, [colmap[k] for k in keys]))
                 else:
-                    self.nodes = self._merge(self.nodes, part, ["node_id"])
+                    merged = self._merge(merged, part, ["node_id"])
+            self.nodes = self._commit(merged)
         if edges:
             edf = self.spark.createDataFrame(
                 [(e["src"], e["dst"], e["rel_type"], e.get("similarity_score"))
@@ -1141,7 +1106,7 @@ class MemoryEngine:
                 edf.join(ids.withColumnRenamed("node_id", "src"), "src", "left_semi")
                 .join(ids.withColumnRenamed("node_id", "dst"), "dst", "left_semi")
             )
-            self.edges = self._merge(self.edges, edf, ["src", "dst", "rel_type"])
+            self.edges = self._commit(self._merge(self.edges, edf, ["src", "dst", "rel_type"]))
 
     def schema(self) -> tuple[list[str], list[str]]:
         labels, rels = graph_ops.schema_discovery(self.nodes, self.edges)
@@ -1186,7 +1151,7 @@ class MemoryEngine:
             F.when(hit, F.col(f"{prefix}_confidence_weighted_30d") * decay + confidence)
             .otherwise(F.col(f"{prefix}_confidence_weighted_30d")),
         ).withColumn("updated_at", F.when(hit, now).otherwise(F.col("updated_at")))
-        self.memories = self._bound(m)
+        self.memories = self._commit(m)
 
     def tier1_list(self, max_items: int = 20) -> DataFrame:
         return tier1_ranked(self.memories, max_items)
@@ -1248,34 +1213,19 @@ class MemoryEngine:
                 continue  # store predates query-log persistence; keep empty
             setattr(self, name, self.spark.read.parquet(path))
 
-    #: truncate a table's lazy lineage after this many merges: every _merge
-    #: stacks an anti-join+union layer, so N batches build an N-deep plan
-    #: whose ANALYSIS cost grows superlinearly — a long session stalls the
-    #: driver before any executor works (round-6 review finding).  At
-    #: production scale the tables live in parquet/Delta (save/load, txn=True)
-    #: and each merge is a bounded rewrite; this bounds the DEV-MODE
-    #: in-session state the same way.
-    _CHECKPOINT_EVERY = 8
-
     @staticmethod
-    def _merge_pure(existing: DataFrame, incoming: DataFrame,
-                    keys: list[str]) -> DataFrame:
+    def _merge(existing: DataFrame, incoming: DataFrame,
+               keys: list[str]) -> DataFrame:
         """MERGE INTO semantics: incoming replaces matching keys, others kept."""
         kept = existing.join(incoming.select(*keys).distinct(), keys, "left_anti")
         return kept.unionByName(incoming)
 
-    def _bound(self, df: DataFrame) -> DataFrame:
-        """Lineage bound for in-session table mutations: merges, updates,
-        deletes and log appends each stack one filter/withColumn/union/join
-        layer on the table plan, so a long session grows an N-deep plan whose
-        driver-side analysis cost is superlinear.  Every _CHECKPOINT_EVERY-th
-        bounded mutation materializes (localCheckpoint), keeping depth O(1)."""
-        self._mutation_count = getattr(self, "_mutation_count", 0) + 1
-        if self._mutation_count % self._CHECKPOINT_EVERY == 0:
-            return df.localCheckpoint(eager=True)
-        return df
-
-    def _merge(self, existing: DataFrame, incoming: DataFrame,
-               keys: list[str]) -> DataFrame:
-        """_merge_pure + the lineage bound."""
-        return self._bound(self._merge_pure(existing, incoming, keys))
+    @staticmethod
+    def _commit(df: DataFrame) -> DataFrame:
+        """The one commit point for table state: every write materializes the
+        table's next state before it is assigned.  Reads then scan a settled
+        copy instead of re-running the merge lineage, lazy current_timestamp()
+        values are pinned once, and the plan stays O(1) deep however long the
+        session runs — the in-session twin of a store of record (at
+        production scale the tables live in parquet/Delta via save/load)."""
+        return df.localCheckpoint(eager=True)

@@ -79,6 +79,16 @@ def _footer_schema(path: str):
         if not path.startswith("file://"):
             return None
         path = path[len("file://"):]
+    sch = _read_footer_schema(path)
+    if sch is None:
+        # a path that no longer yields a footer schema (removed, emptied,
+        # past 32 files, drifted, INT96, unreadable) drops its old entry
+        _SCHEMA_CACHE.pop(path, None)
+    return sch
+
+
+def _read_footer_schema(path: str):
+    """:func:`_footer_schema` for a local path, through the cache."""
     try:
         targets = [path]
         if os.path.isdir(path):

@@ -201,7 +201,7 @@ def _s_lifecycle(spark, sf_dir):
     # S3/S4: upsert — incoming batch replaces matching ids, others kept
     inc = tables.build_memories(docs.filter(F.col("doc_id") % 10 == 3)).select(
         "memory_id", F.upper(F.substring("content", 1, 40)).alias("content"))
-    merged = MemoryEngine._merge_pure(mems.select("memory_id", "content"), inc, ["memory_id"])
+    merged = MemoryEngine._merge(mems.select("memory_id", "content"), inc, ["memory_id"])
     parts.append(merged.filter(_idnum() % 10 == 3).select(
         F.lit("S3_S4_upsert").alias("component"),
         F.concat_ws("|", "memory_id", "content").alias("id"),
@@ -350,7 +350,7 @@ def _s9_s10_sinks(spark, sf_dir):
         F.lit("Supplier").alias("label"),
         F.col("s_name").alias("prop_name"),
         F.lit("delta").alias("prop_status"))
-    merged = MemoryEngine._merge_pure(
+    merged = MemoryEngine._merge(
         nodes.select("node_id", "label", "prop_name", "prop_status"),
         delta, ["node_id"])
 

@@ -86,17 +86,26 @@ def test_delete_all_requires_ownership_not_read_grant(engine):
     assert engine.get_memory("m1") is not None
 
 
-def test_delete_all_is_set_based(engine):
+def test_delete_all_is_set_based(engine, monkeypatch):
     # S13 must be one anti-join per table, not a driver-side per-id loop of
     # chained filters: plan depth stays O(1) in the number of doomed ids.
+    # Committed tables are materialized, so read the plans delete_all hands
+    # to the commit point.
+    handed = []
+    commit = engine._commit
+
+    def spy(df):
+        handed.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return commit(df)
+
+    monkeypatch.setattr(engine, "_commit", spy)
     engine.delete_all(AclContext(user_id="alice"))
-    plan = engine.memories._jdf.queryExecution().optimizedPlan().toString()
-    assert "LeftAnti" in plan
+    # no index attached, so no tombstone commit: memories, chunks, nodes, edges
+    assert len(handed) == 4
+    for plan in handed:
+        assert "LeftAnti" in plan
     # no per-id NOT-equal chain survived the rewrite
-    assert "NOT (memory_id" not in plan.replace("= m", "= <id>")
-    for df, col in [(engine.chunks, "memory_id"), (engine.nodes, "node_id"),
-                    (engine.edges, "src")]:
-        assert "LeftAnti" in df._jdf.queryExecution().optimizedPlan().toString()
+    assert "NOT (memory_id" not in handed[0].replace("= m", "= <id>")
 
 
 def test_add_graph_merge_and_endpoint_check(engine):
@@ -498,15 +507,13 @@ def test_search_with_custom_metadata_spec(spark):
 
 
 def test_merge_lineage_stays_bounded_over_many_batches(spark):
-    """Each _merge stacks an anti-join+union layer; without periodic plan
-    truncation a long session's table plan grows one layer per batch and
-    driver-side ANALYSIS stalls long before execution.  After 3x the
-    checkpoint interval of single-memory adds, the memories plan must hold
-    a bounded number of join layers — not one per batch."""
-    from memory_opensource_spark.api import MemoryEngine
-
+    """Each _merge stacks an anti-join+union layer; without plan truncation
+    a long session's table plan grows one layer per batch and driver-side
+    ANALYSIS stalls long before execution.  After 24 single-memory adds the
+    memories plan must hold a bounded number of join layers — not one per
+    batch."""
     eng = MemoryEngine(spark, dim=16)
-    n = MemoryEngine._CHECKPOINT_EVERY * 3
+    n = 24
     for i in range(n):
         # token-disjoint contents so V4 ingest near-dup reuse (>0.97) never
         # collapses rows — this test is about lineage, not dedup
@@ -515,9 +522,60 @@ def test_merge_lineage_stays_bounded_over_many_batches(spark):
                        user_id="u")
     plan = eng.memories._jdf.queryExecution().optimizedPlan().toString()
     joins = plan.count("Join")
-    assert joins < MemoryEngine._CHECKPOINT_EVERY * 2, (
+    assert joins < 2, (
         f"{joins} join layers after {n} batches — lineage not truncated")
     assert eng.memories.count() == n  # data intact across checkpoints
+
+
+def test_updated_at_is_pinned_at_the_write(engine):
+    """A write's current_timestamp() is stamped once, when the write commits:
+    two reads of the same row, 1.5 s apart, see the same updated_at."""
+    import time
+
+    def updated_at(mid):
+        return engine.memories.filter(F.col("memory_id") == mid) \
+            .select("updated_at").collect()[0][0]
+
+    engine.record_feedback(["m1"], kind="citation")
+    engine.update_memory("m2", custom_metadata='{"k": "v"}')
+    first = {mid: updated_at(mid) for mid in ("m1", "m2")}
+    time.sleep(1.5)
+    assert {mid: updated_at(mid) for mid in ("m1", "m2")} == first
+
+
+def _jobs_in(spark, group, fn):
+    """Run fn under a Spark job group; return (result, its job count)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_logged_search_runs_the_plan_once(engine, spark):
+    """search(log_query=True) materializes its result once: the logged hit
+    ids and the returned rows are the same copy, so the caller's collect
+    runs no search job of its own, and the logged call costs one search
+    plus its writes."""
+    ctx = AclContext(user_id="alice")
+    kw = dict(ctx=ctx, score_threshold=0.0)
+    plain, plain_jobs = _jobs_in(
+        spark, "plain-search", lambda: engine.search("distributed spark engine", **kw).collect())
+    out, call_jobs = _jobs_in(
+        spark, "logged-search-call",
+        lambda: engine.search("distributed spark engine", log_query=True, **kw))
+    logged, collect_jobs = _jobs_in(spark, "logged-search-collect", out.collect)
+    assert [r.memory_id for r in logged] == [r.memory_id for r in plain]
+    assert engine.query_logs.collect()[0].retrieved_memory_ids == \
+        [r.memory_id for r in logged]
+    assert plain_jobs >= 2
+    assert collect_jobs <= 1, f"the caller's collect re-ran the search ({collect_jobs} jobs)"
+    # one search, the hit-id read of its copy, the query_logs and memories
+    # commits
+    assert call_jobs <= plain_jobs + 3, (
+        f"logged search ran {call_jobs} jobs; a plain one {plain_jobs}")
 
 
 def test_ann_serving_is_delete_aware_without_corpus_rescan(engine, tmp_path):

@@ -185,3 +185,34 @@ def test_schema_cache_invalidated_on_rewrite(spark):
         assert isinstance(s2.fields[0].dataType, T.LongType)
     finally:
         shutil.rmtree(d, ignore_errors=True)
+
+
+def test_schema_cache_evicts_paths_that_stop_yielding_a_schema(spark):
+    """A cached path whose footer schema is no longer usable (here: a drifted
+    part file appended) returns None AND drops its entry, so the cache never
+    holds schemas for paths it no longer serves."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from memory_opensource_spark.sources import tables
+
+    d = tempfile.mkdtemp()
+    try:
+        p = f"{d}/t.parquet"
+        os.makedirs(p)
+        pq.write_table(pa.table({"a": pa.array([1], type=pa.int64())}),
+                       f"{p}/part-0.parquet")
+        assert tables._footer_schema(p) is not None
+        assert p in tables._SCHEMA_CACHE
+        pq.write_table(pa.table({"a": pa.array([2.5], type=pa.float64())}),
+                       f"{p}/part-1.parquet")
+        assert tables._footer_schema(p) is None
+        assert p not in tables._SCHEMA_CACHE
+        shutil.rmtree(p)
+        pq.write_table(pa.table({"a": pa.array([1], type=pa.int64())}), p)
+        assert tables._footer_schema(p) is not None
+        os.remove(p)
+        assert tables._footer_schema(p) is None
+        assert p not in tables._SCHEMA_CACHE
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
