@@ -20,13 +20,18 @@ and assigns it only through ``MemoryEngine._commit``, which materializes it:
 each read sees a settled copy with pinned timestamps and an O(1)-deep plan,
 like a store of record.  All writes are idempotent on ids (replay-safe,
 SURVEY §7.3).
+
+An add chunks and embeds its batch into one frame; its memory, chunk and node
+deltas are projections of that frame.  A re-added memory replaces its whole
+chunk set, and its rows in an attached search index are tombstoned (as on
+update or delete) until the next rebuild.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
@@ -109,10 +114,6 @@ CHUNK_SCHEMA = StructType([
 
 #: the feedback counters every new memory starts at zero
 COUNTER_COLS = [c for c in MEMORY_SCHEMA.names if c.startswith(("cache_", "citation_"))]
-
-#: memory columns every chunk carries as its searchable point payload
-CHUNK_PAYLOAD_COLS = [c for c in CHUNK_SCHEMA.names
-                      if c != "memory_id" and c in MEMORY_SCHEMA.names]
 
 NODE_SCHEMA = StructType([
     StructField("node_id", StringType()),
@@ -484,15 +485,22 @@ class MemoryEngine:
         """The write path behind add_memory_batch and import_omo_archive:
         chunk -> embed -> V4 near-dup reuse -> MERGE memories/chunks/nodes.
         ``new`` holds memory rows without the feedback counters, which start
-        at zero.  Returns the reuse pairs {new_id, reuse_id, score} and the
-        fresh (stored) memory rows, both materialized.  Nothing is collected
-        to the driver, so an archive-sized ``new`` stays distributed."""
+        at zero.  One chunked frame carries every delta: its chunk rows keep
+        their memory's row, one anti-join drops memories with any reused
+        chunk, and the memory and node deltas are the ``chunk_index = 0``
+        rows.  The chunks merge keys on memory_id, so a re-add replaces the
+        whole chunk set and tombstones its index rows.  Returns the reuse
+        pairs {new_id, reuse_id, score} and the stored memory rows, both
+        materialized.  Nothing is collected to the driver, so an
+        archive-sized ``new`` stays distributed."""
         new = new.select("*", *[F.lit(0.0).alias(c) for c in COUNTER_COLS])
-        # materialize the batch's embeddings ONCE: left lazy, the reuse check,
-        # the chunk merge and the row-count estimate would each re-run the
-        # chunk+embed UDF stages
-        embedded = self._embed_df(
-            ingest_plan.chunk_text(new, content_col="content")).localCheckpoint(eager=True)
+        # materialize the batch's embeddings ONCE: left lazy, the reuse check
+        # and every delta would each re-run the chunk+embed UDF stages.  The
+        # chunk count is observed by the same job
+        n_chunks = Observation()
+        embedded = ingest_plan.embed(
+            ingest_plan.chunk_text(new), self.embedder, self.dim).observe(
+            n_chunks, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
         # the engine tracks its own chunk-count estimate so dedup routing
         # never needs a count() scan (checkpointed plans carry no stats);
         # load() resets it to None -> routing falls back to plan statistics.
@@ -502,17 +510,22 @@ class MemoryEngine:
             embedded, self.chunks, INGEST_DEDUP_THRESHOLD,
             approx_existing_rows=self._chunk_rows_est).localCheckpoint(eager=True)
         # memories with ANY reused chunk drop out via anti-join (never an isin
-        # of collected ids); the fresh rows feed three commits, so they are
-        # materialized once
-        fresh = new.join(
+        # of collected ids); the stored chunk rows feed every commit below,
+        # so they are materialized once
+        fresh = embedded.join(
             reused.select(strip_chunk_suffix(F.col("new_id")).alias("memory_id")).distinct(),
             "memory_id", "left_anti").localCheckpoint(eager=True)
-        fresh_chunks = embedded.join(fresh.select("memory_id", *CHUNK_PAYLOAD_COLS), "memory_id")
+        fresh_mems = fresh.filter(F.col("chunk_index") == 0)
+        old_mems, replaced = self.memories, Observation()
         self.memories = self._commit(self._merge(
-            self.memories, fresh.select(*MEMORY_SCHEMA.names), ["memory_id"]))
+            old_mems, fresh_mems.select(*MEMORY_SCHEMA.names), ["memory_id"], replaced))
+        if replaced.get["n"]:
+            # a re-added memory's index rows hold its old chunks
+            self._tombstone(fresh_mems.select("memory_id").join(
+                old_mems.select("memory_id"), "memory_id", "left_semi"))
         self.chunks = self._commit(self._merge(
-            self.chunks, fresh_chunks.select(*CHUNK_SCHEMA.names), ["chunk_id"]))
-        mem_nodes = fresh.select(
+            self.chunks, fresh.select(*CHUNK_SCHEMA.names), ["memory_id"]))
+        mem_nodes = fresh_mems.select(
             F.col("memory_id").alias("node_id"), F.lit("Memory").alias("label"),
             F.substring("content", 1, 60).alias("prop_name"), F.lit("active").alias("prop_status"),
         )
@@ -521,19 +534,10 @@ class MemoryEngine:
             # over-estimate (counts reused chunks too; deletes never subtract)
             # — errs toward the scalable grid route, never toward a too-big
             # driver broadcast
-            self._chunk_rows_est += embedded.count()
-        return reused, fresh
+            self._chunk_rows_est += n_chunks.get["n"]
+        return reused, fresh_mems.select(*MEMORY_SCHEMA.names)
 
     # ---- embedding seam -------------------------------------------------------------
-
-    def _embed_df(self, chunked):
-        """Chunk rows -> +embedding column: the configured real model through
-        the Arrow-batched pandas_udf seam, else the deterministic default."""
-        if self.embedder is not None:
-            return ingest_plan.model_embed(chunked, self.embedder, dim=self.dim)
-        # the Arrow twin, not the Column form: bit-identical vectors without
-        # the O(dim x tokens) interpreted-HOF cost (hash_embed_arrow docstring)
-        return ingest_plan.hash_embed_arrow(chunked, dim=self.dim)
 
     def _embed_query(self, text: str) -> list[float]:
         """Query text -> vector, with the SAME model as ingestion (a
@@ -767,32 +771,22 @@ class MemoryEngine:
         self._ann_tombstones = self._commit(ids if t is None else t.unionByName(ids))
 
     def _ann_candidates(self, qvec: list[float], nprobe: int) -> DataFrame:
-        """Chunk candidates from the attached IVF layout: bucket IN-filter
-        lands in PartitionFilters, so only nprobe/C of the files are read.
-        Approximate by construction — recall/scan trade measured in PERF.md.
+        """Chunk candidates from the attached IVF layout (ann_index.probed_rows
+        reads nprobe/C of the files).  Approximate by construction —
+        recall/scan trade measured in PERF.md.
 
         Staleness reconciliation: candidates anti-join the TOMBSTONE set
-        (memories deleted or updated since index attach — small, broadcast),
-        so stale rows never burn overfetch slots or resurface, and the query
-        cost stays proportional to the probed buckets, never the corpus.
-        Tombstoned-by-update memories serve again after the next
-        build_search_index/append_to_index — the standard ANN index-refresh
-        trade; rebuild after bulk updates."""
+        (memories deleted, updated or re-added since index attach — small,
+        broadcast), so stale rows never burn overfetch slots or resurface,
+        and the query cost stays proportional to the probed buckets, never
+        the corpus.  Tombstoned memories serve again after the next
+        build_search_index."""
         from .sources import ann_index
 
-        cents, assign_k = ann_index._load_sidecar(self.spark, self._ann_index_path)
-        probe = ann_index.probe_buckets(qvec, cents, nprobe)
-        cand = (self.spark.read.parquet(self._ann_index_path)
-                .filter(F.col(ann_index.BUCKET_COL).isin(probe)))
-        if assign_k > 1:
-            # replicated rows are byte-identical once the bucket column is
-            # dropped — distinct-all keeps the same one-row-per-chunk set as
-            # a pure-grouping HashAggregate (first(embedding)'s array buffer
-            # forced SortAggregate); same rework as ann_index.ann_query
-            cand = cand.drop(ann_index.BUCKET_COL).dropDuplicates()
+        cand = ann_index.probed_rows(self.spark, self._ann_index_path, qvec, nprobe)
         if self._ann_tombstones is not None:
             cand = cand.join(F.broadcast(self._ann_tombstones), "memory_id", "left_anti")
-        return cand.drop(ann_index.BUCKET_COL)
+        return cand
 
     def _ann_candidates_pq(self, qvec: list[float], nprobe: int,
                            top_k: int, ctx=None, spec=None) -> DataFrame:
@@ -987,11 +981,8 @@ class MemoryEngine:
             # partitioning, so the embed UDF would launch one (empty) task
             # per partition for a single-row input
             changed = mem.filter(F.col("memory_id") == memory_id).coalesce(1)
-            rechunked = self._embed_df(
-                ingest_plan.chunk_text(changed, content_col="content")
-            )
-            new_chunks = rechunked.join(
-                changed.select("memory_id", *CHUNK_PAYLOAD_COLS), "memory_id")
+            new_chunks = ingest_plan.embed(
+                ingest_plan.chunk_text(changed), self.embedder, self.dim)
             self.chunks = self._commit(
                 self.chunks.filter(F.col("memory_id") != memory_id).unionByName(
                     new_chunks.select(*CHUNK_SCHEMA.names)))
@@ -1214,10 +1205,18 @@ class MemoryEngine:
             setattr(self, name, self.spark.read.parquet(path))
 
     @staticmethod
-    def _merge(existing: DataFrame, incoming: DataFrame,
-               keys: list[str]) -> DataFrame:
-        """MERGE INTO semantics: incoming replaces matching keys, others kept."""
-        kept = existing.join(incoming.select(*keys).distinct(), keys, "left_anti")
+    def _merge(existing: DataFrame, incoming: DataFrame, keys: list[str],
+               replaced: Observation | None = None) -> DataFrame:
+        """MERGE INTO semantics: incoming replaces matching keys, others kept.
+        ``replaced`` observes ``n``, the number of existing rows replaced,
+        within the job that materializes the merge — no job of its own."""
+        keyset = incoming.select(*keys).distinct()
+        if replaced is None:
+            kept = existing.join(keyset, keys, "left_anti")
+        else:
+            kept = (existing.join(keyset.withColumn("_replaced", F.lit(True)), keys, "left")
+                    .observe(replaced, F.count("_replaced").alias("n"))
+                    .filter(F.col("_replaced").isNull()).drop("_replaced"))
         return kept.unionByName(incoming)
 
     @staticmethod

@@ -32,12 +32,9 @@ from ..semantics import (
 from .similarity import (
     BLAS_BROADCAST_BUDGET_ROWS,
     route_rows as _route_rows,
-    cosine_join,
     cosine_join_blas,
-    grid_knn_join,
     grid_near_duplicates,
-    knn_join,
-    knn_join_blas,
+    knn_join_auto,
 )
 
 def exact_duplicates(docs: DataFrame, id_col: str = "doc_id",
@@ -340,7 +337,6 @@ def simhash_hamming_duplicates(docs: DataFrame, id_col: str = "doc_id",
 def embedding_near_duplicates(vectors: DataFrame, id_col: str = "vec_id",
                               vec_col: str = "embedding",
                               threshold: float = DUPLICATE_SWEEP_THRESHOLD,
-                              use_blas: bool = True,
                               approx_rows: int | None = None) -> DataFrame:
     """Reference V5 duplicate sweep (memory/memory_graph.py:10333-10390):
     pairs with cosine STRICTLY > threshold (memory_graph.py:10378 compares with
@@ -350,18 +346,13 @@ def embedding_near_duplicates(vectors: DataFrame, id_col: str = "vec_id",
     streams left partitions against a broadcast matrix; past the budget it
     switches to :func:`grid_near_duplicates` — the exact grid sweep with no
     driver-side collect (bit-identical results, bounded memory everywhere).
-    ``use_blas=False`` forces the oracle-shaped expression form.
     ``approx_rows``: optional size hint; when absent, routing reads plan
     statistics instead of running a count() scan (see :func:`_route_rows`)."""
-    if use_blas:
-        if _route_rows(vectors, approx_rows) > BLAS_BROADCAST_BUDGET_ROWS:
-            return grid_near_duplicates(vectors, threshold, id_col, vec_col,
-                                        inclusive=False)
-        join = cosine_join_blas
-    else:
-        join = cosine_join
-    pairs = join(vectors, vectors, threshold, vec_col, vec_col, id_col, id_col,
-                 inclusive=False)
+    if _route_rows(vectors, approx_rows) > BLAS_BROADCAST_BUDGET_ROWS:
+        return grid_near_duplicates(vectors, threshold, id_col, vec_col,
+                                    inclusive=False)
+    pairs = cosine_join_blas(vectors, vectors, threshold, vec_col, vec_col,
+                             id_col, id_col, inclusive=False)
     return pairs.filter(F.col("left_id") < F.col("right_id"))
 
 
@@ -369,32 +360,26 @@ def ingest_dedup_reuse(new_chunks: DataFrame, existing: DataFrame,
                        threshold: float, new_id: str = "chunk_id",
                        existing_id: str = "chunk_id",
                        vec_col: str = "embedding",
-                       use_blas: bool = True,
                        approx_existing_rows: int | None = None,
                        inclusive: bool = False) -> DataFrame:
     """Reference V4 near-duplicate check at ingest
     (memory/memory_graph.py:14214-14442): for each new chunk, its best existing
     match with cosine > threshold -> {new_id, reuse_id, score}; rows absent =
-    genuinely new.  1-NN via knn_join(k=1) then threshold.
+    genuinely new.  1-NN via :func:`knn_join_auto` (k=1), then threshold.
 
-    Scale routing: the BLAS path collects the EXISTING side to a broadcast
-    matrix — safe only within the broadcast budget.  A corpus past it routes to
-    :func:`grid_knn_join` (no driver collect), so add_memory_batch can never
-    OOM the driver on a large store.  ``approx_existing_rows``: optional size
-    hint; when absent, routing reads plan statistics instead of running a
-    count() scan (see :func:`_route_rows`).
+    Scale routing is knn_join_auto's: the BLAS path collects the EXISTING side
+    to a broadcast matrix — safe only within the broadcast budget — and a
+    corpus past it routes to the grid join (no driver collect), so
+    add_memory_batch can never OOM the driver on a large store.
+    ``approx_existing_rows``: optional size hint; when absent, routing reads
+    plan statistics instead of running a count() scan.
 
     ``inclusive``: V4's reference gate is STRICT (score > 0.97,
     memory_graph.py:14421 — the default); V7 content resolution passes
     score_threshold to Qdrant, whose semantics are INCLUSIVE (>= 0.95,
     :11557-11570) — that caller sets inclusive=True."""
-    if use_blas:
-        join = (grid_knn_join
-                if _route_rows(existing, approx_existing_rows) > BLAS_BROADCAST_BUDGET_ROWS
-                else knn_join_blas)
-    else:
-        join = knn_join
-    nn = join(new_chunks, existing, 1, vec_col, vec_col, new_id, existing_id)
+    nn = knn_join_auto(new_chunks, existing, 1, vec_col, vec_col, new_id, existing_id,
+                       approx_right_rows=approx_existing_rows)
     keep = (F.col("score") >= threshold) if inclusive else (F.col("score") > threshold)
     return (
         nn.filter(keep)

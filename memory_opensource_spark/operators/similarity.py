@@ -637,14 +637,13 @@ def ivf_topk_search(df: DataFrame, query_vec: list[float], k: int,
     """ANN top-k: probe only the ``nprobe`` centroids nearest the query.
 
     With the table pre-partitioned by ``ivf_bucket``, the bucket filter becomes
-    partition pruning — the scan reads nprobe/C of the data.
+    partition pruning — the scan reads nprobe/C of the data.  Buckets rank
+    by :func:`..sources.ann_index.probe_buckets` (ties to the lowest index,
+    like the oracle's ``ORDER BY ... DESC, cid ASC``).
     """
-    import numpy as np
+    from ..sources.ann_index import probe_buckets
 
-    q = np.asarray(query_vec, dtype="float64")
-    cents = np.asarray(centroids, dtype="float64")
-    sims = cents @ q
-    probe = [int(i) for i in np.argsort(-sims)[:nprobe]]
+    probe = probe_buckets(query_vec, centroids, nprobe)
     # budget-routed assignment: the on-the-fly variant pays the same
     # rows x centroids assignment cost as the build path (persisted layouts
     # skip it entirely — prefer those past fixture scale)

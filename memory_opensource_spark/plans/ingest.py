@@ -5,9 +5,10 @@ SURVEY §3.2): chunk -> embed -> near-dup check (reuse if cosine > 0.97) -> appe
 chunks + memories.  The enrichment phase (graph extraction, entity resolution) is
 plans-level composition of operators.graph + operators.similarity.
 
-Chunking and embedding are the only Python stages; both are Arrow-batched
-(mapInPandas / pandas-free arithmetic here since the deterministic embedder is
-pure hashing — expressible as Column expressions, no UDF at all).
+Chunking is a pure Column program that keeps every input column.  Embedding
+goes through one seam, :func:`embed`: a model callable as an Arrow-batched
+pandas_udf, or the deterministic hash embedder's Arrow form.  The hash
+embedder's Column form, :func:`hash_embed`, stays as its DuckDB-oracle twin.
 """
 
 from __future__ import annotations
@@ -28,6 +29,13 @@ def chunk_text(df: DataFrame, content_col: str = "content",
     """V1 chunking (models/embedding_model.py:784-789: TokenTextSplitter
     chunk_size=2048, overlap=0) — token-window slices as a pure Column program:
     tokens -> sequence of window starts -> slice + rejoin -> posexplode.
+
+    Every input column is kept: each chunk row carries its source row plus
+    ``chunk_index``, ``chunk_content``, ``total_chunks``, ``chunk_id`` and
+    ``point_id``.  Every row yields at least one chunk (empty or
+    whitespace-only text gives one empty chunk), so the ``chunk_index = 0``
+    rows are exactly the input rows — the write path derives its memory,
+    chunk and node deltas from this one frame.
     """
     toks = tokens(F.col(content_col))
     n_chunks = F.greatest(F.ceil(F.size(toks) / chunk_tokens), F.lit(1)).cast("int")
@@ -36,7 +44,7 @@ def chunk_text(df: DataFrame, content_col: str = "content",
         starts, lambda i: F.concat_ws(" ", F.slice(toks, i * chunk_tokens + 1, chunk_tokens))
     )
     out = df.select(
-        F.col(id_col),
+        "*",
         F.posexplode(pieces).alias("chunk_index", "chunk_content"),
         n_chunks.alias("total_chunks"),
     )
@@ -154,21 +162,33 @@ def model_embed(df: DataFrame, embed_fn, text_col: str = "chunk_content",
     return df.withColumn("embedding", udf(F.col(text_col)))
 
 
+def embed(chunked: DataFrame, embedder=None,
+          dim: int = EMBEDDING_DIM_FIXTURE) -> DataFrame:
+    """Chunk rows -> + ``embedding``: the one embed seam of the write path
+    (``MemoryEngine`` adds and updates, :func:`ingest`).  ``embedder`` is an
+    optional ``list[str] -> list[list[float]]`` model callable driven through
+    :func:`model_embed`; None runs the deterministic hash embedder in its
+    Arrow form, :func:`hash_embed_arrow` — bit-identical to the Column form
+    :func:`hash_embed`, which stays the DuckDB-oracle spec twin."""
+    if embedder is not None:
+        return model_embed(chunked, embedder, dim=dim)
+    return hash_embed_arrow(chunked, dim=dim)
+
+
 def ingest(new_memories: DataFrame, existing_chunks: DataFrame,
            dedup_threshold: float = INGEST_DEDUP_THRESHOLD,
            dim: int = EMBEDDING_DIM_FIXTURE,
            embedder=None) -> dict[str, DataFrame]:
     """Full §3.2 foreground path.  Returns dict of:
-    - ``chunks``: new chunk rows to append (near-dups excluded)
+    - ``chunks``: new chunk rows to append (near-dups excluded); each keeps
+      every column of its ``new_memories`` row (:func:`chunk_text`)
     - ``reused``: {new_id, reuse_id, score} mappings (V4 hits)
 
-    ``embedder``: optional ``list[str] -> list[list[float]]`` model callable
-    driven through the :func:`model_embed` pandas_udf seam; None keeps the
-    deterministic hash embedder (oracle-checkable default).
+    Embedding goes through :func:`embed`, the seam ``MemoryEngine`` uses:
+    ``embedder`` is an optional model callable, None keeps the deterministic
+    hash embedder (oracle-checkable default).
     """
-    chunked = chunk_text(new_memories)
-    embedded = (model_embed(chunked, embedder, dim=dim) if embedder is not None
-                else hash_embed(chunked, dim=dim))
+    embedded = embed(chunk_text(new_memories), embedder, dim)
     reused = ingest_dedup_reuse(
         embedded, existing_chunks, dedup_threshold,
         new_id="chunk_id", existing_id="chunk_id",

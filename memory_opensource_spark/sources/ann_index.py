@@ -299,14 +299,14 @@ def probe_buckets(query_vec: list[float], centroids: list[list[float]],
     return [i for _, i in sims[:nprobe]]
 
 
-def ann_query(spark: SparkSession, index_path: str, query_vec: list[float],
-              k: int, nprobe: int = 4,
-              centroids: list[list[float]] | None = None,
-              id_col: str = "vec_id", vec_col: str = "embedding",
-              pred=None) -> DataFrame:
-    """ANN top-k against the persisted layout.  The bucket IN-filter lands in
-    ``PartitionFilters`` (directory pruning), so the scan touches nprobe/C of
-    the index files — this is what makes it ANN at scale, not a full scan."""
+def probed_rows(spark: SparkSession, index_path: str, query_vec: list[float],
+                nprobe: int,
+                centroids: list[list[float]] | None = None) -> DataFrame:
+    """The persisted rows of the ``nprobe`` buckets that best match the query,
+    one row per vector, without the bucket column — the one IVF probe path
+    behind :func:`ann_query` and ``MemoryEngine``'s ANN serving.  The bucket
+    IN-filter lands in ``PartitionFilters`` (directory pruning), so the scan
+    touches nprobe/C of the index files."""
     if centroids is not None:
         # Caller-supplied centroids MUST be the build-time centroids: the
         # on-disk layout is partitioned by build-time assignment, so probing
@@ -330,28 +330,39 @@ def ann_query(spark: SparkSession, index_path: str, query_vec: list[float],
         cents, assign_k = _load_sidecar(spark, index_path)
         multi = assign_k > 1
     probe = probe_buckets(query_vec, cents, nprobe)
-    df = spark.read.parquet(index_path).filter(F.col(BUCKET_COL).isin(probe))
-    if pred is not None:
-        df = df.filter(pred)
+    df = (spark.read.parquet(index_path).filter(F.col(BUCKET_COL).isin(probe))
+          .drop(BUCKET_COL))
     # Multi-assigned (spill) layouts replicate a vector across buckets; when
     # two of its buckets are probed the same id reaches the candidate set
     # twice with an identical score and could occupy two top-k slots.  Dedup
     # the candidates — bounded by the probed nprobe/C subset.  Gated on the
     # build-time assign_k so the common single-assignment read path keeps its
-    # zero-shuffle TakeOrdered plan.
+    # zero-shuffle plan.
     if multi:
-        # Dedup on every column EXCEPT the bucket id: a replicated vector's
-        # rows are byte-identical once the bucket column is dropped (the
-        # copies differ only in bucket assignment), so distinct-all keeps
-        # the same one-row-per-id candidate set while planning as a
+        # A replicated vector's rows are byte-identical once the bucket
+        # column is dropped (the copies differ only in bucket assignment),
+        # so distinct-all keeps one row per id while planning as a
         # pure-grouping HashAggregate — the key-subset form aggregated the
-        # embedding with first(), whose array buffer is not
-        # UnsafeRow-mutable and forced a SortAggregate (candidates sorted
-        # per task before the combine).  The final drop(BUCKET_COL) below
-        # is then a no-op on this path.
-        df = df.drop(BUCKET_COL).dropDuplicates()
+        # embedding with first(), whose array buffer is not UnsafeRow-mutable
+        # and forced a SortAggregate (candidates sorted per task before the
+        # combine).
+        df = df.dropDuplicates()
+    return df
+
+
+def ann_query(spark: SparkSession, index_path: str, query_vec: list[float],
+              k: int, nprobe: int = 4,
+              centroids: list[list[float]] | None = None,
+              id_col: str = "vec_id", vec_col: str = "embedding",
+              pred=None) -> DataFrame:
+    """ANN top-k against the persisted layout: top-k over the pruned
+    :func:`probed_rows` scan — this is what makes it ANN at scale, not a
+    full scan."""
+    df = probed_rows(spark, index_path, query_vec, nprobe, centroids)
+    if pred is not None:
+        df = df.filter(pred)
     return topk_search(df, query_vec, k, None, vec_col, id_col,
-                       score_threshold=None).drop(BUCKET_COL)
+                       score_threshold=None)
 
 
 def pruning_evidence(spark: SparkSession, index_path: str,
@@ -359,9 +370,7 @@ def pruning_evidence(spark: SparkSession, index_path: str,
                      centroids: list[list[float]] | None = None) -> bool:
     """True when the ann_query physical plan prunes partitions on the bucket
     column — the PERF.md proof that probing is file-skipping, not filtering."""
-    cents = centroids if centroids is not None else load_centroids(spark, index_path)
-    probe = probe_buckets(query_vec, cents, nprobe)
-    df = spark.read.parquet(index_path).filter(F.col(BUCKET_COL).isin(probe))
+    df = probed_rows(spark, index_path, query_vec, nprobe, centroids)
     plan = df._jdf.queryExecution().executedPlan().toString()
     return ("PartitionFilters: [" in plan
             and BUCKET_COL in plan.split("PartitionFilters:")[1][:400])

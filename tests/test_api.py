@@ -781,3 +781,126 @@ def test_pq_rerank_size_floors_and_hard_cap():
     assert pq_rerank_size(128, 20, 100_000_000_000, 65_536, 32) == PQ_RERANK_BUDGET
     # nprobe=None scans everything: still capped
     assert pq_rerank_size(128, 20, 10_000_000_000, 1024, None) == PQ_RERANK_BUDGET
+
+
+# ---- the single-frame write: one chunked frame per add ----------------------------
+
+def _words(prefix: str, n: int) -> str:
+    return " ".join(f"{prefix}{i}" for i in range(n))
+
+
+def _chunk_rows(engine, memory_id):
+    return sorted(engine.chunks.filter(F.col("memory_id") == memory_id).collect(),
+                  key=lambda r: r.chunk_index)
+
+
+def test_readd_with_fewer_chunks_replaces_the_chunk_set(spark):
+    """The chunks MERGE keys on memory_id: re-adding a 2-chunk memory with
+    one-chunk text leaves only the new chunk — no stale m_1 (old text, old
+    total_chunks) keeps serving the old content under the new row."""
+    engine = MemoryEngine(spark, dim=32)
+    old = _words("old", 2100)
+    engine.add_memory(memory_id="m", content=old, user_id="alice")
+    assert [r.chunk_id for r in _chunk_rows(engine, "m")] == ["m_0", "m_1"]
+
+    res = engine.add_memory(memory_id="m", content="brand new short text", user_id="alice")
+    assert not res.reused
+    rows = _chunk_rows(engine, "m")
+    assert [(r.chunk_id, r.total_chunks, r.chunk_content) for r in rows] == \
+        [("m_0", 1, "brand new short text")]
+    assert engine.memories.filter(F.col("memory_id") == "m").count() == 1
+    assert engine.nodes.filter(F.col("node_id") == "m").count() == 1
+    # a full scan on the old second chunk's text scores only the new chunk
+    # (a stale m_1 would match it exactly)
+    hits = engine.search(_words("old", 2100).split(" ", 2048)[-1],
+                         ctx=AclContext(user_id="alice"), score_threshold=0.0).collect()
+    assert {h.memory_id: h.score for h in hits}.get("m", 0.0) < 0.5
+
+
+def test_readd_tombstones_its_index_rows(engine, tmp_path):
+    """A re-added memory's index rows are stale: ANN serving skips them and
+    append_to_search_index refuses the id until a rebuild.  A batch of new
+    ids leaves the tombstone set untouched."""
+    engine.build_search_index(str(tmp_path / "ivf_readd"), n_centroids=2)
+    ctx = AclContext(user_id="alice")
+    engine.add_memory(memory_id="m8", content="completely unrelated fresh words",
+                      user_id="alice")
+    assert engine._ann_tombstones is None
+
+    engine.add_memory(memory_id="m1", content="kafka moves event streams",
+                      user_id="alice", user_read_access=["alice"])
+    ann = {r.memory_id for r in
+           engine.search("spark is a distributed engine", ctx=ctx,
+                         score_threshold=0.0, ann_nprobe=2).collect()}
+    assert "m1" not in ann
+    with pytest.raises(ValueError, match="stale"):
+        engine.append_to_search_index(["m1"])
+    # the rebuild serves the new content
+    engine.build_search_index(str(tmp_path / "ivf_readd2"), n_centroids=2)
+    hits = engine.search("kafka moves event streams", ctx=ctx,
+                         score_threshold=0.0, ann_nprobe=2).collect()
+    assert hits[0].memory_id == "m1"
+
+
+def test_write_path_hostile_inputs(spark):
+    """Empty and whitespace-only content store one empty chunk; 2048 tokens
+    are one chunk and 2049 are two; every memory gets one row and one node."""
+    engine = MemoryEngine(spark, dim=32)
+    items = {"e0": "", "e1": "   ", "t2048": _words("a", 2048),
+             "t2049": _words("b", 2049)}
+    res = engine.add_memory_batch([
+        {"memory_id": k, "content": v, "user_id": "alice"} for k, v in items.items()])
+    assert [r.reused for r in res] == [False] * 4
+    assert {r.memory_id: r.content for r in engine.memories.collect()} == items
+    assert sorted(r.node_id for r in engine.nodes.collect()) == sorted(items)
+    chunks = {k: [(r.chunk_index, r.total_chunks, r.chunk_content)
+                  for r in _chunk_rows(engine, k)] for k in items}
+    assert chunks["e0"] == [(0, 1, "")]
+    assert chunks["e1"] == [(0, 1, "")]
+    assert chunks["t2048"] == [(0, 1, items["t2048"])]
+    assert chunks["t2049"] == [(0, 2, _words("b", 2048)), (1, 2, "b2048")]
+
+
+def test_batch_of_only_reused_items_writes_nothing(engine):
+    """Every item near-duplicates a stored memory: the deltas are empty and
+    each result names the memory it reuses."""
+    before = [engine.memories.count(), engine.chunks.count(), engine.nodes.count()]
+    res = engine.add_memory_batch([
+        {"memory_id": "d1", "content": "spark is a distributed engine", "user_id": "dave"},
+        {"memory_id": "d2", "content": "neo4j stores property graphs", "user_id": "dave"},
+    ])
+    assert [(r.memory_id, r.reused, r.reused_from) for r in res] == \
+        [("d1", True, "m1"), ("d2", True, "m3")]
+    assert [engine.memories.count(), engine.chunks.count(), engine.nodes.count()] == before
+
+
+def test_one_near_duplicate_chunk_reuses_the_whole_memory(engine):
+    """A 2-chunk memory whose second chunk near-duplicates a stored chunk is
+    reused as a whole: none of its chunks, no memory row and no node."""
+    res = engine.add_memory(
+        memory_id="two", user_id="dave",
+        content=_words("filler", 2048) + " qdrant stores dense vectors")
+    assert res.reused and res.reused_from == "m2"
+    assert engine.get_memory("two") is None
+    assert engine.chunks.filter(F.col("memory_id") == "two").count() == 0
+    assert engine.nodes.filter(F.col("node_id") == "two").count() == 0
+
+
+def test_first_add_job_count(spark):
+    """A first add into an empty store derives every delta from one chunked
+    frame (no join from chunk rows back to memory rows) and observes its
+    chunk count inside the embed job, so the add runs at most 20 Spark jobs
+    on the test session (local[4], 4 shuffle partitions).  The
+    chunk-rows-join-back form ran 24-26."""
+    engine = MemoryEngine(spark, dim=32)
+    items = [
+        {"memory_id": "m1", "content": "spark is a distributed engine",
+         "user_id": "alice", "user_read_access": ["alice", "bob"]},
+        {"memory_id": "m2", "content": "qdrant stores dense vectors",
+         "user_id": "alice", "user_read_access": ["alice"]},
+        {"memory_id": "m3", "content": "neo4j stores property graphs",
+         "user_id": "carol", "user_read_access": ["carol"]},
+    ]
+    res, jobs = _jobs_in(spark, "first-add", lambda: engine.add_memory_batch(items))
+    assert [r.reused for r in res] == [False] * 3
+    assert jobs <= 20, f"a first add ran {jobs} jobs"

@@ -92,6 +92,17 @@ def test_ivf_assign_and_probe(vec_df):
     assert [r.id for r in out.collect()] == [r.id for r in exact.collect()]
 
 
+def test_ivf_topk_probe_ties_break_to_the_lowest_bucket(spark):
+    """Tied centroids probe the lowest bucket, as assignment and the
+    ann_ivf_topk oracle (ORDER BY score DESC, cid ASC) break ties: the rows
+    sit in bucket 0, and an unstable argsort probed an empty bucket."""
+    df = spark.createDataFrame([(i, [1.0, i / 10]) for i in range(5)],
+                               "id int, embedding array<double>")
+    out = similarity.ivf_topk_search(df, [1.0, 0.0], 3, [[1.0, 0.0]] * 100,
+                                     nprobe=1, id_col="id")
+    assert [r.id for r in out.collect()] == [0, 1, 2]
+
+
 def test_grid_sweep_bit_identical_to_blas(vec_df):
     """grid_near_duplicates (no driver collect) must reproduce the broadcast
     sweep exactly — every pair, same scores, left < right orientation."""
@@ -118,21 +129,22 @@ def test_grid_knn_matches_blas_knn(vec_df):
 
 
 def test_ingest_reuse_routes_to_grid_past_budget(vec_df, monkeypatch):
-    """Past the broadcast budget the V4 ingest check must take the grid path."""
+    """Past the broadcast budget the V4 ingest check must take the grid path
+    (knn_join_auto's routing, fed the caller's existing-rows hint)."""
     df, _ = vec_df
     from memory_opensource_spark.operators import dedup
 
-    monkeypatch.setattr(dedup, "BLAS_BROADCAST_BUDGET_ROWS", 10)
     called = {}
-    real = dedup.grid_knn_join
+    real = similarity.grid_knn_join
 
     def spy(*a, **kw):
         called["grid"] = True
         return real(*a, **kw)
 
-    monkeypatch.setattr(dedup, "grid_knn_join", spy)
-    out = dedup.ingest_dedup_reuse(df.limit(5), df, threshold=0.99,
-                                   new_id="id", existing_id="id")
+    monkeypatch.setattr(similarity, "grid_knn_join", spy)
+    out = dedup.ingest_dedup_reuse(
+        df.limit(5), df, threshold=0.99, new_id="id", existing_id="id",
+        approx_existing_rows=similarity.BLAS_BROADCAST_BUDGET_ROWS + 1)
     out.collect()
     assert called.get("grid")
 

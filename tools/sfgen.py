@@ -35,6 +35,7 @@ MEASUREMENT DATA ONLY: nothing here feeds the oracle gate; the lane is
 selected explicitly via SPARK_GRAFT_SF_DIR.
 
 Usage: python tools/sfgen.py [--mult K] [--src DIR] [--out DIR]
+       K in 1..26 (the 26 distinct Caesar rotations)
        defaults: K=10, src=/root/testdata/sf0.1, out=.scratch/sf1
 """
 
@@ -63,7 +64,9 @@ def _caesar_table(r: int):
 def _shift(col: pa.ChunkedArray, delta: int) -> pa.Array:
     import pyarrow.compute as pc
 
-    return pc.add(col, pa.scalar(delta, type=col.type)).combine_chunks()
+    # checked: a key column that overflows its type must fail, not wrap
+    # into another replica's (or a negative) key range
+    return pc.add_checked(col, pa.scalar(delta, type=col.type)).combine_chunks()
 
 
 def main() -> None:
@@ -75,6 +78,10 @@ def main() -> None:
         i = args.index("--src"); src = args[i + 1]; del args[i:i + 2]
     if "--out" in args:
         i = args.index("--out"); out = args[i + 1]; del args[i:i + 2]
+    if not 1 <= mult <= 26:
+        # the Caesar rotation is the identity for r % 26 == 0: replica 26
+        # would repeat replica 0's text byte for byte
+        raise ValueError(f"--mult must be between 1 and 26, got {mult}")
     if out is None:
         src_sf = float(src.rstrip("/").rsplit("sf", 1)[-1])
         label = src_sf * mult
