@@ -4,6 +4,13 @@
     {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
 value = total wall-clock over the headline set (lower is better).
+
+Every raw sample, the medians and one ``layers`` record per row go to
+``BENCH_detail.json`` beside this file.  A layer record splits the row's
+fastest run into its build (the query-function call, eager jobs included)
+and its execution (the ``count()``), each with the Spark jobs, tasks,
+stages, bytes and spill that ``perfbench.trace.Tracer`` reads from the
+status store.
 """
 
 from __future__ import annotations
@@ -15,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.trace import Tracer  # noqa: E402
 
 HEADLINE = [
     "search_flagship",
@@ -225,6 +234,56 @@ HEADLINE = [
 ]
 
 
+#: per-span fields of a layer record: name -> (job_stats key, divisor);
+#: counts have no divisor
+_LAYER_FIELDS = {
+    "jobs": ("jobs", None),
+    "tasks": ("tasks", None),
+    "stages": ("stages", None),
+    "input_mb": ("input_bytes", 1e6),
+    "shuffle_read_mb": ("shuffle_read_bytes", 1e6),
+    "shuffle_write_mb": ("shuffle_write_bytes", 1e6),
+    "spill_mb": ("spill_bytes", 1e6),
+    "executor_run_s": ("executor_run_ms", 1e3),
+}
+
+
+def layer_record(spans: tuple[dict, dict], stats: dict[int, dict]) -> dict:
+    """A row's layer record from its (build, exec) spans and
+    ``Tracer.job_stats()``.  A span that ran no job has no job_stats entry
+    and counts as zero."""
+    out = {}
+    for part, span in zip(("build", "exec"), spans):
+        figs = stats.get(span["id"], {})
+        out[part] = {"s": round(span["end"] - span["start"], 3)}
+        for field, (key, div) in _LAYER_FIELDS.items():
+            v = figs.get(key, 0)
+            out[part][field] = v if div is None else round(v / div, 3)
+    return out
+
+
+def time_row(spark, tracer: Tracer, name: str, sf_dir: str,
+             runs: int) -> tuple[list[float], tuple[dict, dict], int]:
+    """Time one registry row ``runs`` times -> (wall samples, the fastest
+    run's (build, exec) spans, row count).  Each run is two spans of
+    ``tracer``: ``<name>.build`` around the query-function call, which
+    includes any eager jobs the function runs, and ``<name>.exec`` around
+    the ``count()``."""
+    from memory_opensource_spark.queries import QUERIES
+
+    fn = QUERIES[name]
+    samples, spans, n = [], [], 0
+    for _ in range(runs):
+        t0 = time.time()
+        with tracer.span(f"{name}.build") as build:
+            df = fn(spark, sf_dir)
+        with tracer.span(f"{name}.exec") as run:
+            n = df.count()  # forces full execution without driver-side row transfer
+        samples.append(round(time.time() - t0, 3))
+        spans.append((build, run))
+    return samples, spans[samples.index(min(samples))], n
+
+
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -232,7 +291,8 @@ def main():
     from memory_opensource_spark.queries import QUERIES
     from memory_opensource_spark.session import get_spark
 
-    spark = get_spark("bench")
+    spark = get_spark("bench", extra_conf={
+        "spark.ui.retainedJobs": "100000", "spark.ui.retainedStages": "100000"})
     spark.sparkContext.setLogLevel("ERROR")
 
     # warm the JVM + parquet footers, then one THROWAWAY real query: the first
@@ -262,17 +322,15 @@ def main():
             runs = max(runs, int(sys.argv[sys.argv.index("--medians") + 1]))
         except (IndexError, ValueError):
             print(f"# --medians needs an integer; using {runs} runs", file=sys.stderr)
+    tracer = Tracer()
+    tracer.bind(spark)
+    tracer.active = True
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
     raw: dict[str, list[float]] = {}
+    best_spans: dict[str, tuple[dict, dict]] = {}
     for name in HEADLINE:
-        fn = QUERIES[name]
-        samples, n = [], 0
-        for _ in range(runs):
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            n = df.count()  # forces full execution without driver-side row transfer
-            samples.append(round(time.time() - t0, 3))
+        samples, best_spans[name], n = time_row(spark, tracer, name, sf_dir, runs)
         timings[name] = min(samples)
         medians[name] = round(statistics.median(samples), 3)
         raw[name] = samples
@@ -280,6 +338,14 @@ def main():
               f"({n} rows)", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
+    # one status-store read after the last row: job_stats walks every job
+    # the store holds (~60 ms each over py4j), so a read per row would cost
+    # minutes; the session keeps every job of the run for this read
+    t0 = time.time()
+    stats = tracer.job_stats()
+    layers = {name: layer_record(sp, stats) for name, sp in best_spans.items()}
+    print(f"# layer records read from the status store in {time.time() - t0:.1f}s",
+          file=sys.stderr)
     # Raw samples + medians go to a SIDECAR file, not the final stdout line:
     # inlining them in round 4 pushed the line past the driver's ~2000-char
     # tail capture (BENCH_r04.json parsed: null).  The LAST stdout line must
@@ -297,6 +363,7 @@ def main():
             "queries": timings,
             "queries_median": medians,
             "queries_raw": raw,
+            "layers": layers,
             "sf": float(sf),
         }, f, indent=1)
     print(f"# full raw/median detail written to {detail_path}", file=sys.stderr)

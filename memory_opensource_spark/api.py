@@ -600,7 +600,7 @@ class MemoryEngine:
         # entity extraction are the heaviest plans in the engine, and without
         # this they re-execute for the nodes merge, the edges merge, AND each
         # returned count — ~6x the cost for identical results (round-5 review
-        # finding; same pattern as ann_index.append_to_index)
+        # finding)
         related = out["related_edges"].localCheckpoint(eager=True)
         extracted = out["extracted_edges"].localCheckpoint(eager=True)
         prop_index = out["property_index"].localCheckpoint(eager=True)

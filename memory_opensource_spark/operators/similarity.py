@@ -209,8 +209,9 @@ def cosine_join_blas(left: DataFrame, right: DataFrame, threshold: float,
         ids_arr = np.asarray(ids)
         # ROW-SLICED product: an Arrow batch is ~10k rows, so a full (B, R)
         # matrix at R near the 500k budget is 10k x 500k doubles = 40 GB —
-        # the worker dies with a connection reset (found live by
-        # tools/scale_probe.py).  Slice the batch so slice x R stays ~160 MB.
+        # the worker dies with a connection reset (found live at 600k, PERF.md
+        # "Round-6 scale-routing proof").  Slice the batch so slice x R stays
+        # ~160 MB.
         step = max(64, int(2e7 / max(1, mat.shape[0])))
         for pdf in batches:
             if len(pdf) == 0:
@@ -269,7 +270,7 @@ def knn_join_blas(left: DataFrame, right: DataFrame, k: int,
         ids_arr = np.asarray(ids)
         R = mat.shape[0]
         # ROW-SLICED product (same 40 GB-per-batch hazard as cosine_join_blas;
-        # found live by tools/scale_probe.py): slice x R stays ~160 MB.
+        # PERF.md "Round-6 scale-routing proof"): slice x R stays ~160 MB.
         # Top-k per row: vectorized argpartition preselect of m = k+17
         # candidates (+1 absorbs the self pair), then an exact
         # (score desc, id asc) lexsort of just those m; if the kept boundary

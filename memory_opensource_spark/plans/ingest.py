@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.ids import chunk_id, point_id
+from ..functions.ids import chunk_id, point_id, strip_chunk_suffix
 from ..functions.text import tokens
 from ..functions.vector import l2_normalize
 from ..semantics import CHUNK_SIZE_TOKENS, EMBEDDING_DIM_FIXTURE, INGEST_DEDUP_THRESHOLD
@@ -180,8 +180,10 @@ def ingest(new_memories: DataFrame, existing_chunks: DataFrame,
            dim: int = EMBEDDING_DIM_FIXTURE,
            embedder=None) -> dict[str, DataFrame]:
     """Full §3.2 foreground path.  Returns dict of:
-    - ``chunks``: new chunk rows to append (near-dups excluded); each keeps
-      every column of its ``new_memories`` row (:func:`chunk_text`)
+    - ``chunks``: chunk rows to append; each keeps every column of its
+      ``new_memories`` row (:func:`chunk_text`).  A memory with ANY reused
+      chunk is reused whole, so none of its chunks appear here — the rule
+      ``MemoryEngine`` applies, never half a memory appended
     - ``reused``: {new_id, reuse_id, score} mappings (V4 hits)
 
     Embedding goes through :func:`embed`, the seam ``MemoryEngine`` uses:
@@ -194,6 +196,7 @@ def ingest(new_memories: DataFrame, existing_chunks: DataFrame,
         new_id="chunk_id", existing_id="chunk_id",
     )
     new_chunks = embedded.join(
-        reused.select(F.col("new_id").alias("chunk_id")), "chunk_id", "left_anti"
+        reused.select(strip_chunk_suffix(F.col("new_id")).alias("memory_id")).distinct(),
+        "memory_id", "left_anti",
     )
     return {"chunks": new_chunks, "reused": reused}

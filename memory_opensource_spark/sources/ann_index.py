@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.vector import l2_normalize, to_double
@@ -119,7 +119,7 @@ def refine_centroids(df: DataFrame, init_centroids: list[list[float]],
 
     ``tol`` default is 5e-4 (r11, was 1e-4): the per-iteration max
     movement on a CONVERGED codebook floors at the training-sample noise,
-    measured ~2-3e-4 at 600k/C=1200 (tools/refine_iters_probe.py — and
+    measured ~2-3e-4 at 600k/C=1200 (PERF.md "Round-10 recluster" — and
     assignment quality after 1 iteration equals 10 iterations to 4
     decimals there), so a tol below the noise floor never fires and a
     steady-state recluster paid a full extra assign+mean round just to
@@ -181,7 +181,7 @@ def refine_centroids(df: DataFrame, init_centroids: list[list[float]],
             break
         # plateau stop (round-10): on an already-fit codebook the per-iter
         # MAX movement floors at the training-sample noise level (measured
-        # ~2e-4 at 600k/C=1200 — tools/refine_iters_probe.py) and the tol
+        # ~2e-4 at 600k/C=1200 — PERF.md "Round-10 recluster") and the tol
         # above never fires, so a converged warm start used to pay all
         # max_iter rounds.  Lloyd's progress decays geometrically; a move
         # that fails to halve is the noise floor, not progress (quality
@@ -242,13 +242,11 @@ def append_to_index(df: DataFrame, index_path: str,
     spark = df.sparkSession
     cents, assign_k = _load_sidecar(spark, index_path)
     bucketed = ivf_assign_auto(df, cents, assign_k, vec_col, bucket_col=BUCKET_COL)
-    # materialize the (micro-batch-sized) assignment once: count() as a
-    # separate action would re-execute the whole upstream embed+assign DAG a
-    # second time for the write — doubling the hot ingest loop's cost
-    bucketed = bucketed.localCheckpoint(eager=True)
-    n = bucketed.count()
-    bucketed.write.mode("append").partitionBy(BUCKET_COL).parquet(index_path)
-    return n
+    # the write job counts its own rows, so an append is one job
+    n = Observation()
+    (bucketed.observe(n, F.count(F.lit(1)).alias("n"))
+     .write.mode("append").partitionBy(BUCKET_COL).parquet(index_path))
+    return n.get["n"]
 
 
 def _load_sidecar(spark: SparkSession, index_path: str) -> tuple[list[list[float]], int]:

@@ -282,6 +282,26 @@ def test_ivf_append_to_index(spark, tmp_path):
     assert row.vec_id in {r.vec_id for r in res.collect()}
 
 
+def test_ivf_append_job_count(spark, tmp_path):
+    """An append is one write job that counts its own rows: no checkpoint
+    and no count() ahead of it (those ran 3 more jobs)."""
+    from memory_opensource_spark.sources import ann_index
+
+    emb = tables.load(spark, "/root/testdata/sf0.001", "embeddings")
+    path = str(tmp_path / "ivf_jobs")
+    ann_index.build_ivf_index(emb.filter(F.col("vec_id") < 150), path, n_centroids=8)
+    new = emb.filter((F.col("vec_id") >= 150) & (F.col("vec_id") < 170))
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf-append", "ivf-append")
+    try:
+        n = ann_index.append_to_index(new, path)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup("ivf-append"))
+    assert n == 20
+    assert jobs <= 1, f"an append ran {jobs} jobs"
+
+
 def test_zorder_write_skips_on_both_columns(spark, tmp_path):
     """Z-order clustering must make footer-stats skipping effective on BOTH
     clustered columns simultaneously — a single-column sort only tightens

@@ -54,6 +54,22 @@ def test_ingest_dedups_against_existing(spark):
     assert {r.chunk_id for r in new_chunks} == {"mB_0"}
 
 
+def test_ingest_reuses_a_multi_chunk_memory_whole(spark):
+    """A memory whose SECOND chunk near-duplicates a stored one is reused
+    whole: none of its chunks are appended (the MemoryEngine rule), where a
+    chunk-id anti-join appended its first chunk alone."""
+    filler = " ".join(f"filler{i}" for i in range(2048))
+    stored = "gamma delta epsilon zeta"
+    mems = spark.createDataFrame(
+        [("two", f"{filler} {stored}"), ("one", "unrelated fresh words")],
+        "memory_id string, content string")
+    existing = ingest.hash_embed(ingest.chunk_text(
+        spark.createDataFrame([("x", stored)], "memory_id string, content string")), dim=32)
+    out = ingest.ingest(mems, existing, dim=32)
+    assert [(r.new_id, r.reuse_id) for r in out["reused"].collect()] == [("two_1", "x_0")]
+    assert {r.chunk_id for r in out["chunks"].collect()} == {"one_0"}
+
+
 def test_search_end_to_end_ranks_self_first(spark):
     chunks = tables.build_chunks(tables.load(spark, SF, "embeddings"))
     memories = tables.build_memories(tables.load(spark, SF, "documents"))
